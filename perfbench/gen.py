@@ -17,16 +17,19 @@ import json
 import random
 from pathlib import Path
 
-# etl_bulk: the scripts/scale_stress.py rules shape at a size one cold CLI
-# run finishes in well under half a minute on 4 cores.
-BULK_PERSONS = 6_000
-BULK_EVENTS = 60_000
+# etl_bulk: the scripts/scale_stress.py rules shape (ten events a person)
+# at a size one cold CLI run finishes in under half a minute on 4 cores,
+# yet large enough that the sink's write grows with the data: at half this
+# size it is a quarter of the run, at this size nearly a third.
+BULK_PERSONS = 12_000
+BULK_EVENTS = 120_000
 BULK_UNKNOWN_SHARE = 0.005
 
-# etl_wide: many small files, ~20 mapped fields each.
+# etl_wide: many small files, a dozen mapped fields each (three per term-map
+# band), so one cold run stays well under a minute on 4 cores.
 WIDE_PERSONS = 300
 WIDE_FILES = 4  # the first half share one shape (grouped-template path)
-WIDE_FIELDS = 16
+WIDE_FIELDS = 12
 WIDE_ROWS = 200
 # term-map sizes cycle through every compiler band: inlined CASE chain,
 # constant map literal, and broadcast rules-table join
@@ -138,7 +141,7 @@ def _wide_field_map(tag: str, n_terms: int, wildcard: bool, concept_dest: str,
 
 
 def gen_wide(seed: int, inputs: Path, rules_file: Path) -> dict[str, int]:
-    """Many small files with ~20 mapped fields over three target tables."""
+    """Many small files with a dozen mapped fields over three target tables."""
     rnd = random.Random(f"etl_wide:{seed}")
     inputs.mkdir(parents=True, exist_ok=True)
     persons = [[f"w{i}", _date(rnd, 1940, 60), rnd.choice("MF")] for i in range(WIDE_PERSONS)]
@@ -163,8 +166,9 @@ def gen_wide(seed: int, inputs: Path, rules_file: Path) -> dict[str, int]:
     pid_space = WIDE_PERSONS + WIDE_PERSONS // 50  # ~2% unknown person ids
     for f in range(WIDE_FILES):
         # files below `shared` are one shape: same columns, target and
-        # band layout; only their term literals differ
-        target, concept_dest, dt_dest, value_dest = _WIDE_TARGETS[0 if f < shared else f % 3]
+        # band layout; only their term literals differ. The others cycle
+        # through the targets from the second, so every target gets rules.
+        target, concept_dest, dt_dest, value_dest = _WIDE_TARGETS[0 if f < shared else (1 + f - shared) % 3]
         shape = 0 if f < shared else f
         name = f"wide{f:02d}"
         fields = [f"s{shape}f{k:02d}" for k in range(WIDE_FIELDS)]

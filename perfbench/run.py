@@ -7,7 +7,7 @@ Workloads (see BENCHMARK.json for why each exists):
 
 - ``etl_bulk``: a person file plus one large events file under two mapped
   fields;
-- ``etl_wide``: many small files with ~20 mapped fields each, spread over
+- ``etl_wide``: many small files with a dozen mapped fields each, spread over
   three OMOP tables;
 - ``analytics_sf1``: q1, q9, q18 and omop_observation_events over a fixed
   star-schema input, each fully materialised with the ``noop`` writer.
@@ -28,7 +28,8 @@ generator derives from its inputs, the summary's per-table output counts
 against the written rows, and an order-insensitive digest of every output
 file against the other samples and against the digest recorded for the
 (workload, seed) in digests.json; analytics results against each query's
-DuckDB oracle. A sample that fails a check counts in ``failed``.
+DuckDB oracle. A sample that fails a check counts in ``failed``, and its
+figures stay out of the medians.
 
 Readable lines go first; the last line of standard output is the JSON
 result. Host context (core count, a fixed-work Spark probe, load averages,
@@ -65,7 +66,7 @@ END_TO_END = (
 )
 # timed passes per analytics sample (a traced sample makes one), after
 # WARM_PASSES untimed ones
-PASSES = 5
+PASSES = 3
 WARM_PASSES = 2
 # a run ends within this many seconds of its start, whatever its samples do
 RUN_DEADLINE_S = 170
@@ -267,6 +268,7 @@ def bench(args, work: Path, cores: int, load_start, deadline: float) -> int:
             digests.append(dg)
             shutil.rmtree(spec["out_dir"], ignore_errors=True)
         res["traced"] = traced
+        res["ok"] = not problems
         if problems:
             failed += 1
             print(f"sample {i} output check failed:\n  " + "\n  ".join(problems), file=sys.stderr)
@@ -284,8 +286,11 @@ def bench(args, work: Path, cores: int, load_start, deadline: float) -> int:
         print("no sample completed", file=sys.stderr)
         return 1
 
-    plain = [s for s in samples if not s["traced"]]
-    traced = [s for s in samples if s["traced"]]
+    # figures come only from samples that passed every check; when none did,
+    # from all of them, and the result says it is not correct
+    measured = [s for s in samples if s["ok"]] or samples
+    plain = [s for s in measured if not s["traced"]]
+    traced = [s for s in measured if s["traced"]]
     metrics: dict[str, dict] = {}
     if args.trace:
         for name, unit, _ in PER_LAYER:
