@@ -206,7 +206,9 @@ def prefer_shuffle_hash(index: DataFrame) -> bool:
     materializes the persisted index before planning the verify join: an
     index too big for any broadcast means the join is big x big and the
     shuffled-hash build of the bounded pairs⋈shingles side wins (r16 sf10
-    A/B: 20.3 s vs 27.0 s SMJ). Unknown stats keep the planner's choice."""
+    A/B: 20.3 s vs 27.0 s SMJ). A negative threshold turns broadcast joins
+    off, so every index counts as too big. Unknown stats keep the planner's
+    choice."""
     try:
         spark = index.sparkSession
         raw = str(
@@ -219,10 +221,15 @@ def prefer_shuffle_hash(index: DataFrame) -> bool:
                 raw, mult = raw[: -len(suf)], m
                 break
         bthreshold = int(raw) * mult
-        size = int(index._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        return bthreshold >= 0 and size > bthreshold
+        return bthreshold < 0 or plan_size_bytes(index) > bthreshold
     except Exception:
         return False
+
+
+def plan_size_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of df's optimized plan: the actual cached
+    bytes once df is persisted and materialized."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def jaccard_verify(

@@ -1,33 +1,39 @@
-"""Dense sequential ID assignment — scalable row numbering.
+"""Dense sequential ID assignment over value-determined buckets.
 
 The reference assigns ids with mutable driver-side counters in write order
-(run.py:126-132, person_helpers.py:129-151). On Spark a naive equivalent is
-``row_number() over (ORDER BY ...)`` — correct, but a single-partition sort
-at scale. ``with_dense_ids`` keeps dense 1..N semantics without one:
+(run.py:126-132, person_helpers.py:129-151). The Spark equivalent is
+``offset + row_number() OVER (ORDER BY order_cols)``; ``with_dense_ids``
+computes exactly that without sorting a large input in one partition:
 
-1. range-repartition on the order columns (data ends up globally ordered
-   across partitions),
-2. per-partition row_number (narrow window — partition-local sort only),
-3. per-partition row counts collected to the driver (one tiny job),
-   turned into cumulative offsets and joined back as a broadcast map.
+1. the caller names a bucket: one integer expression per leading order
+   column whose value order agrees with the row order, e.g.
+   ``(file, line >> 16)`` for the order ``(file, line, ...)``;
+2. the input is persisted, one aggregation collects each bucket's row
+   count and the range of those leading order columns, the ranges are
+   checked against the bucket-key order, and consecutive buckets merge
+   into window groups of at least ``_MIN_GROUP_ROWS`` rows;
+3. id = the group's start (the count before it) + row_number() over
+   ``Window.partitionBy(group start)``, the start picked by a CASE chain
+   over the groups' first bucket keys.
 
-Inputs are persisted before the range exchange because repartitionByRange
-SAMPLES its child (an unpersisted expensive lineage would run ~3x). Small
-inputs (< ``small_threshold`` rows, known after the materialization count)
-take a fast path — a plain global-order window over one partition — saving
-the sampling pass and the per-partition bookkeeping; at real scale the
-range path engages automatically.
+Buckets and groups are functions of row values, so a recompute after cache
+loss, a different partition count or an AQE re-plan hands out the same ids.
+With one group (a small input, one bucket, or buckets whose ranges overlap)
+step 3 is the plain global window, which is correct for any input.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 
-_PID = "__ctspark_pid"
+_GROUP = "__ct_group"
 
-SMALL_THRESHOLD = 2_000_000
+# A hash-partitioned window only beats the single-partition one once each
+# of its sorts is large: cold local[4] runs over a cached input took 1.2 s
+# global vs 1.6-2.2 s bucketed at 240k rows, 4.1-4.5 s vs 3.9 s at 4M rows.
+_MIN_GROUP_ROWS = 1 << 20
 
 
 def with_dense_ids(
@@ -35,160 +41,87 @@ def with_dense_ids(
     order_cols: list[str],
     id_col: str,
     offset: int = 0,
-    num_partitions: int | None = None,
-    small_threshold: int = SMALL_THRESHOLD,
+    *,
+    bucket: list[Column],
     persist_registry: list[DataFrame] | None = None,
-    size_bound: int | None = None,
-    bucket_col: str | None = None,
 ) -> DataFrame:
-    """Add ``id_col`` = offset + dense rank 1..N in (order_cols) order.
+    """Add ``id_col`` = offset + dense rank 1..N in ascending (order_cols)
+    order, ids equal to Spark's ``row_number() OVER (ORDER BY order_cols)``.
 
-    persist_registry: optional list the caller owns; every DataFrame this
-    function leaves persisted is appended so the caller can unpersist after
-    the result is materialized (otherwise caches live until LRU eviction).
+    bucket: one integer expression per leading order column whose value
+    order agrees with the row order (see the module docstring). A constant
+    is one bucket.
 
-    size_bound: caller-supplied UPPER bound on df's row count (e.g. from
-    parquet footer metadata). When it fits the small path, the persist +
-    count pass that normally sizes the path is skipped entirely and the
-    window goes straight into the plan — one pass over the data instead of
-    two. An over-estimate is safe (worst case: a single-partition sort of a
-    larger-than-ideal input); correctness never depends on it.
-
-    bucket_col: name of an integer column whose VALUE order agrees with
-    the (order_cols) order — every row of bucket b sorts strictly before
-    every row of any bucket with a higher key range (e.g. a deterministic
-    range bucket of the leading order column). When given, ids come from
-    the zero-shuffle bucket path (see _bucket_dense_ids); a runtime
-    disjointness check over the actual data falls back to the generic
-    path if the promise doesn't hold, so correctness never depends on it.
+    persist_registry: optional list the caller owns; the input cache this
+    function leaves persisted is appended so the caller can unpersist it
+    after the result is materialized.
     """
-    if size_bound is not None and size_bound <= small_threshold:
-        w = Window.orderBy(*order_cols)
-        return df.withColumn(id_col, (F.row_number().over(w) + F.lit(offset)).cast("long"))
-
-    if bucket_col is not None:
-        out = _bucket_dense_ids(df, order_cols, id_col, offset, bucket_col)
-        if out is not None:
-            return out
-
     src = df.persist(StorageLevel.MEMORY_AND_DISK)
-    n_rows = src.count()  # materializes the cache; also sizes the fast path
-
-    if n_rows <= small_threshold:
-        # one global window; a single sort of a cached small dataset is
-        # cheaper than sampling + range exchange + offset bookkeeping
-        if persist_registry is not None:
-            persist_registry.append(src)
-        w = Window.orderBy(*order_cols)
-        return src.withColumn(id_col, (F.row_number().over(w) + F.lit(offset)).cast("long"))
-
-    n_parts = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    ranged = (
-        src.repartitionByRange(int(n_parts), *[F.col(c) for c in order_cols])
-        .withColumn(_PID, F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    counts = ranged.groupBy(_PID).count().orderBy(_PID).collect()
-    src.unpersist()  # ranged is materialized by the count job above
     if persist_registry is not None:
-        persist_registry.append(ranged)
-    offsets: dict[int, int] = {}
-    acc = offset
-    for row in counts:
-        offsets[row[_PID]] = acc
-        acc += row["count"]
-    w = Window.partitionBy(_PID).orderBy(*order_cols)
-    offset_expr = F.element_at(
-        F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]),
-        F.col(_PID),
-    ) if offsets else F.lit(offset)
-    out = (
-        ranged.withColumn(id_col, (F.row_number().over(w) + offset_expr).cast("long"))
-        .drop(_PID)
-    )
-    return out
+        persist_registry.append(src)
+    key = _key(bucket)
+    groups = _groups(src, key, order_cols[: len(bucket)], offset)
+    if len(groups) <= 1:
+        return _numbered(src, Window.orderBy(*order_cols), F.lit(offset), id_col)
+    # a row belongs to the last group whose first key is not above its own
+    start = F.when(key < _key(map(F.lit, groups[1][0])), groups[0][1])
+    for (first, _), (_, prev_start) in zip(groups[2:], groups[1:]):
+        start = start.when(key < _key(map(F.lit, first)), prev_start)
+    grouped = src.withColumn(_GROUP, start.otherwise(groups[-1][1]).cast("long"))
+    w = Window.partitionBy(_GROUP).orderBy(*order_cols)
+    return _numbered(grouped, w, F.col(_GROUP), id_col).drop(_GROUP)
 
 
-def _bucket_dense_ids(
-    df: DataFrame,
-    order_cols: list[str],
-    id_col: str,
-    offset: int,
-    bucket_col: str,
-) -> DataFrame | None:
-    """Zero-extra-shuffle dense ids over a bucket-clustered input.
+def _numbered(df: DataFrame, w: Window, start: Column, id_col: str) -> DataFrame:
+    return df.withColumn(id_col, (F.row_number().over(w) + start).cast("long"))
 
-    The generic range path costs a full repartitionByRange of the payload
-    plus TWO persists of it (the sampling pass must not recompute an
-    expensive lineage, and the window consumer re-reads the ranged frame) —
-    at sf10 that was a 799 MB shuffle and a second multi-GB cache per
-    bench repeat, and the range sampler's seed depends on the RDD id, so
-    partition boundaries (hence per-partition offsets) are only stable
-    while the cache lives. This path instead keys EVERYTHING on the bucket
-    VALUE, which is a pure function of the row:
 
-    1. one narrow aggregation computes per-bucket counts + min/max of the
-       order-cols tuple (runs once per plan build, not per execution);
-    2. the driver verifies bucket key ranges are strictly disjoint and
-       ordered — the caller's promise, checked against the actual data —
-       and turns counts into cumulative start offsets (guide §2.5:
-       deterministic synthetic keys, no sampling);
-    3. ids = row_number over Window.partitionBy(bucket) + broadcast-joined
-       per-bucket start. When the input is already hash-partitioned by
-       the bucket column (the callers arrange this at the source spread
-       exchange, which existed anyway), the window needs NO exchange and
-       the join broadcasts a few thousand rows — the payload is never
-       shuffled or cached at all.
+def _key(parts) -> Column:
+    return F.struct(*[c.cast("long").alias(f"b{i}") for i, c in enumerate(parts)])
 
-    Returns None when the promise fails (overlapping/NULL ranges): caller
-    falls back to the generic path. Everything here is value-determined,
-    so re-materialization (bench cache isolation) reproduces identical
-    ids regardless of physical partitioning.
-    """
-    # the collect is bounded by the DISTINCT bucket count; cap it so a
-    # degenerate bucket expression (near-unique values) can never pull a
-    # row-sized result to the driver — over the cap means the caller's
-    # bucketing is too fine, fall back to the generic path
-    max_buckets = 1 << 18
-    stats = (
-        df.groupBy(bucket_col)
-        .agg(
-            F.count(F.lit(1)).alias("__ct_n"),
-            F.min(F.struct(*[F.col(c) for c in order_cols])).alias("__ct_lo"),
-            F.max(F.struct(*[F.col(c) for c in order_cols])).alias("__ct_hi"),
-        )
-        .limit(max_buckets + 1)
-        .collect()
-    )
-    if len(stats) > max_buckets:
-        return None
-    try:
-        rows = sorted(stats, key=lambda r: tuple(r["__ct_lo"]))
-    except TypeError:
-        return None  # NULLs or incomparable types in the order tuple
-    starts: list[tuple[int, int]] = []
-    acc = offset
-    prev_hi: tuple | None = None
-    for r in rows:
-        b, lo, hi = r[bucket_col], r["__ct_lo"], r["__ct_hi"]
-        if b is None or lo is None or hi is None:
-            return None
-        lo_t, hi_t = tuple(lo), tuple(hi)
-        if any(v is None for v in lo_t) or any(v is None for v in hi_t):
-            return None
-        if prev_hi is not None and not prev_hi < lo_t:
-            return None  # ranges overlap: the bucket promise is false
-        prev_hi = hi_t
-        starts.append((int(b), acc))
-        acc += r["__ct_n"]
-    spark = df.sparkSession
-    starts_df = spark.createDataFrame(
-        starts, f"{bucket_col} bigint, __ct_start bigint"
-    )
-    w = Window.partitionBy(bucket_col).orderBy(*order_cols)
-    return (
-        df.withColumn("__ct_rn", F.row_number().over(w))
-        .join(F.broadcast(starts_df), bucket_col)
-        .withColumn(id_col, (F.col("__ct_rn") + F.col("__ct_start")).cast("long"))
-        .drop("__ct_rn", "__ct_start")
-    )
+
+def _groups(src: DataFrame, key: Column, lead: list[str], offset: int) -> list[tuple[tuple, int]]:
+    """(first bucket key, first id - 1) per window group in bucket-key
+    order, or [] when the buckets cannot number the rows: a NULL key, or
+    ranges of the leading order columns that do not follow the key order."""
+    aggs = [F.count(F.lit(1)).alias("n")]
+    for i, c in enumerate(lead):
+        aggs += [F.min(c).alias(f"lo{i}"), F.max(c).alias(f"hi{i}"), F.count(c).alias(f"nn{i}")]
+    stats = src.groupBy(key.alias("key")).agg(*aggs).collect()
+    if any(v is None for r in stats for v in r["key"]):
+        return []
+    groups: list[tuple[tuple, int]] = []
+    acc, rows, prev = offset, _MIN_GROUP_ROWS, None
+    for r in sorted(stats, key=lambda r: tuple(r["key"])):
+        # min() skips NULLs, which sort first: a column with any NULL starts at NULL
+        cur = [
+            (_order_key(None if r[f"nn{i}"] < r["n"] else r[f"lo{i}"]), _order_key(r[f"hi{i}"]))
+            for i in range(len(lead))
+        ]
+        if prev is not None and not _before(prev, cur):
+            return []
+        prev = cur
+        if rows >= _MIN_GROUP_ROWS:
+            groups.append((tuple(r["key"]), acc))
+            rows = 0
+        acc += r["n"]
+        rows += r["n"]
+    return groups
+
+
+def _before(a: list[tuple], b: list[tuple]) -> bool:
+    """Whether every row of a bucket with per-column (lo, hi) ranges ``a``
+    sorts before every row of one with ranges ``b``: the first column where
+    the ranges are not one shared value must separate them strictly."""
+    for (alo, ahi), (blo, bhi) in zip(a, b):
+        if ahi < blo:
+            return True
+        if not alo == ahi == blo == bhi:
+            return False
+    return False
+
+
+def _order_key(v) -> tuple:
+    """Python sort key that agrees with Spark's ascending order: NULL before
+    every value, NaN after every number."""
+    return (0,) if v is None else (2,) if v != v else (1, v)

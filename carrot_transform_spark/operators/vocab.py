@@ -5,9 +5,9 @@ of any training run.
   word_id = dense rank in (freq desc, word asc) order — deterministic
   across engines. The corpus collapses to per-word counts first (classic
   map-side-combine aggregation), so the ranking input is |vocab|, not
-  |corpus|; id assignment reuses operators/ids.with_dense_ids, which takes
-  the range-partition path for vocabularies above the small threshold —
-  never a single-partition global sort of a big vocab.
+  |corpus|; id assignment reuses operators/ids.with_dense_ids, bucketed
+  by frequency, so a big vocabulary sorts in one window per frequency
+  instead of a single-partition global sort.
 - ``encode_docs``: per-doc token-id arrays via posexplode + a broadcast
   vocab join, re-assembled in token order with a sort-by-position
   aggregation (partition-local; no global ordering). OOV tokens (cut by
@@ -41,7 +41,11 @@ def build_vocab(
         .withColumn("neg_freq", -F.col("freq"))
     )
     vocab = with_dense_ids(
-        counts, ["neg_freq", "word"], "word_id", persist_registry=persist_registry
+        counts,
+        ["neg_freq", "word"],
+        "word_id",
+        bucket=[F.col("neg_freq")],
+        persist_registry=persist_registry,
     ).drop("neg_freq")
     if max_size is not None:
         vocab = vocab.filter(F.col("word_id") <= max_size)

@@ -15,7 +15,9 @@ One plan per OMOP target table:
            one scan, no join, no shuffle (rules are compiled INTO the plan
            as when-chains — cheaper than broadcasting a 10-row dict table)
     union files per target (implicit UNION ALL)
-      -> dense auto-number ids in write order (W1, scalable range-id op)
+      -> dense auto-number ids in write order (W1, operators/ids.py: one
+         window per group of (file, line range) buckets plus per-group
+         start offsets)
       -> person-map broadcast join (J2; anti-join rejects counted)
 
 All data-plane values stay strings for byte-parity with the reference's
@@ -42,9 +44,9 @@ from carrot_transform_spark.functions.dates import (
     valid_value,
 )
 from carrot_transform_spark.omop.ddl import OmopSchemas, TableSchema
-from carrot_transform_spark.operators.ids import SMALL_THRESHOLD, with_dense_ids
+from carrot_transform_spark.operators.ids import with_dense_ids
 from carrot_transform_spark.rules.ir import RuleSet, TableMapping
-from carrot_transform_spark.sources.registry import BUCKET_COL, LINE_COL, Source
+from carrot_transform_spark.sources.registry import LINE_COL, Source
 
 SRC_COL = "__ct_src"
 FIELD_COL = "__ct_field"
@@ -254,8 +256,6 @@ class CarrotPlanner:
         except Exception:
             return None
         keep.add(LINE_COL)
-        if BUCKET_COL in df.columns:
-            keep.add(BUCKET_COL)  # dense-id bucket rider (ids._bucket_dense_ids)
         if len(keep) >= len(df.columns):
             return None
         return [c for c in df.columns if c in keep]
@@ -327,35 +327,12 @@ class CarrotPlanner:
             return first.select(
                 "source_subject", F.col("source_subject").alias("target_subject"), LINE_COL
             )
-        size_bound = source.size_hint(self.person_table)
-        bucket_col = None
-        if size_bound is not None and size_bound > SMALL_THRESHOLD:
-            # large person file: derive a deterministic range bucket of the
-            # min-line key from the source's footer statistics so dense ids
-            # come from the zero-sampling bucket path (parallel per-bucket
-            # window + broadcast starts) instead of persist + count + a
-            # single-partition sort of every person (~2.8 s serial at sf10).
-            # The one narrow exchange the window inserts replaces the
-            # SinglePartition exchange the serial sort needed anyway.
-            bounds = source.line_bounds(self.person_table)
-            if bounds is not None and bounds[1] > bounds[0]:
-                lo, hi = bounds
-                k = max(1, (hi - lo) // 65536 + 1)
-                bucket_col = "__ct_pm_bucket"
-                first = first.withColumn(
-                    bucket_col,
-                    F.floor((F.col(LINE_COL) - F.lit(lo)) / F.lit(k)).cast("long"),
-                )
         withids = with_dense_ids(
             first,
             [LINE_COL],
             "target_subject",
-            offset=0,
+            bucket=[F.shiftright(F.col(LINE_COL), 16)],
             persist_registry=self._persisted,
-            # distinct persons <= person-file rows; footer metadata makes this
-            # free and known-small inputs then skip the sizing pass
-            size_bound=size_bound,
-            bucket_col=bucket_col,
         )
         return withids.select(
             "source_subject", F.col("target_subject").cast("string").alias("target_subject"), LINE_COL
@@ -410,11 +387,6 @@ class CarrotPlanner:
             )
             for src_file, tm in per_source.items()
         ]
-        cand_bound: int | None = 0
-        for src_file, tm, _df in inputs:
-            if cand_bound is not None:
-                hint = source.size_hint(tm.source_table)
-                cand_bound = None if hint is None else cand_bound + hint * _records_per_row_bound(tm)
 
         # same-shape grouping (WIDE targets only — exactly where per-block
         # compile cost blows up): blocks with equal shape signatures share
@@ -446,24 +418,9 @@ class CarrotPlanner:
                 grouped_idx.update(idxs)
             inputs = [it for i, it in enumerate(inputs) if i not in grouped_idx]
 
-        # single-block targets whose source carries the deterministic line
-        # bucket keep it as a meta rider so dense-id assignment can take
-        # the zero-shuffle bucket path (ids._bucket_dense_ids). Multi-part
-        # targets skip it: the positional union requires every part to end
-        # in the identical select, and grouped/person parts don't emit it.
-        use_bucket = (
-            not grouped_parts
-            and len(inputs) == 1
-            and target != "person"
-            and BUCKET_COL in inputs[0][2].columns
-        )
-
         def build(item: tuple[str, TableMapping, DataFrame]) -> DataFrame:
             src_file, tm, df = item
-            part = self._file_records(
-                df, tm, schema, stats, fileidx=global_files.index(src_file),
-                keep_bucket=use_bucket,
-            )
+            part = self._file_records(df, tm, schema, stats, fileidx=global_files.index(src_file))
             part.schema  # force analysis inside the worker thread
             return part
 
@@ -522,13 +479,12 @@ class CarrotPlanner:
                 [FILEIDX_COL, LINE_COL, FIELDIDX_COL, COMBO_COL],
                 "__ct_auto",
                 offset=self.last_used_ids.get(target, 0),
+                # file, then line range: both lead the order key, so the
+                # bucket needs no rider column through the union
+                bucket=[F.col(FILEIDX_COL), F.shiftright(F.col(LINE_COL), 16)],
                 persist_registry=self._persisted,
-                size_bound=cand_bound,
-                bucket_col=BUCKET_COL if use_bucket else None,
             )
             out = out.withColumn(auto_col, F.col("__ct_auto").cast("string")).drop("__ct_auto")
-        if use_bucket:
-            out = out.drop(BUCKET_COL)
         return out
 
     def target_records(
@@ -634,7 +590,6 @@ class CarrotPlanner:
         schema: TableSchema,
         stats: RejectStats | None,
         fileidx: int = 0,
-        keep_bucket: bool = False,
     ) -> DataFrame:
         # Drift tripwire (see _try_resolve_name): within this file's compile,
         # a resolve MISS on a column the cache projection dropped is a hard
@@ -649,7 +604,7 @@ class CarrotPlanner:
             else None
         )
         with _pruned_columns_guard(dropped):
-            return self._file_records_impl(df, tm, schema, stats, fileidx, keep_bucket)
+            return self._file_records_impl(df, tm, schema, stats, fileidx)
 
     def _file_records_impl(
         self,
@@ -658,7 +613,6 @@ class CarrotPlanner:
         schema: TableSchema,
         stats: RejectStats | None,
         fileidx: int = 0,
-        keep_bucket: bool = False,
     ) -> DataFrame:
         target = tm.target_table
         src_file = tm.source_table
@@ -701,7 +655,6 @@ class CarrotPlanner:
                 F.lit(0).alias(COMBO_COL),
                 F.col(LINE_COL),
                 F.lit(fileidx).alias(FILEIDX_COL),
-                *([F.col(BUCKET_COL)] if keep_bucket else []),
             )
         date_field = main_dt
         # the target's own date source; None when it IS the main column, in
@@ -1053,8 +1006,6 @@ class CarrotPlanner:
             # re-analyze the whole record projection once more per file
             F.lit(fileidx).alias(FILEIDX_COL),
         ]
-        if keep_bucket:
-            meta.append(F.col(BUCKET_COL))  # dense-id bucket rider
         return exploded.select(*cols, *meta)
 
     # -- same-shape block grouping (WIDE targets) -----------------------
@@ -2525,22 +2476,6 @@ class CarrotPlanner:
 
 
 # ---------------------------------------------------------------------------
-
-
-def _records_per_row_bound(tm: TableMapping) -> int:
-    """Upper bound on output records per input row for one (file, target)
-    mapping: each mapped field fans out at most max(len(concept-id list))
-    combination records (clamped-zip semantics; person targets emit one
-    merged combination set, which this also bounds)."""
-    total = 0
-    for cm in tm.concept_mappings.values():
-        max_combo = 1
-        for dmap in cm.value_mappings.values():
-            for ids in dmap.values():
-                if ids:
-                    max_combo = max(max_combo, len(ids))
-        total += max_combo
-    return max(total, 1)
 
 
 def _v1_chosen_buckets(tm: TableMapping):

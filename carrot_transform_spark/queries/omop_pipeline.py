@@ -24,7 +24,7 @@ from carrot_transform_spark.omop.ddl import load_schemas
 from carrot_transform_spark.plans.compiler import CarrotPlanner
 from carrot_transform_spark.queries import load, register
 from carrot_transform_spark.rules.loader import parse_rules
-from carrot_transform_spark.sources.registry import BUCKET_COL, LINE_COL, Source
+from carrot_transform_spark.sources.registry import LINE_COL, Source
 
 from carrot_transform_spark.atpath import DEFAULT_CONFIG as CONFIG, DEFAULT_DDL as DDL
 
@@ -86,52 +86,6 @@ class _SyntheticSource(Source):
 
     _LINE_SOURCES = {"orders": "o_orderkey", "events": "event_id"}
 
-    def size_hint(self, table: str) -> int | None:
-        # parquet footer metadata: exact row count with zero scan
-        import pyarrow.parquet as pq
-
-        try:
-            path = f"{self.sf_dir}/{table}.parquet"
-            from pathlib import Path
-
-            p = Path(path)
-            if p.is_dir():
-                return sum(
-                    pq.ParquetFile(f).metadata.num_rows for f in p.glob("*.parquet")
-                )
-            return pq.ParquetFile(path).metadata.num_rows
-        except Exception:
-            return None
-
-    def line_bounds(self, table: str) -> tuple[int, int] | None:
-        """(min, max) of the line-key column from parquet footer statistics
-        — a driver-side metadata read, no scan. None when unavailable."""
-        col = self._LINE_SOURCES.get(table)
-        if col is None:
-            return None
-        try:
-            from pathlib import Path
-
-            import pyarrow.parquet as pq
-
-            p = Path(f"{self.sf_dir}/{table}.parquet")
-            files = sorted(p.glob("*.parquet")) if p.is_dir() else [p]
-            lo = hi = None
-            for f in files:
-                md = pq.ParquetFile(f).metadata
-                idx = md.schema.names.index(col)
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx).statistics
-                    if st is None or not st.has_min_max:
-                        return None
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-            if lo is None:
-                return None
-            return int(lo), int(hi)
-        except Exception:
-            return None
-
     def read(self, table: str) -> DataFrame:
         df = load(self.spark, self.sf_dir, table)
         line_src = self._LINE_SOURCES.get(table)
@@ -146,45 +100,12 @@ class _SyntheticSource(Source):
         # after the exchange instead of into the single pre-shuffle task a
         # one-file parquet scan gets. Measured 2-3x on the scan stage.
         df = df.withColumn(LINE_COL, line)
-        nparts = self.spark.sparkContext.defaultParallelism
-        bounds = self.line_bounds(table)
-        bucketed = False
-        if bounds is not None and bounds[1] > bounds[0]:
-            # deterministic range bucket of the line key (footer min/max, no
-            # sampling) as the spread key: every downstream stage is then
-            # clustered by disjoint ascending line ranges, which lets dense-
-            # id assignment skip its payload shuffle + second cache entirely
-            # (operators/ids._bucket_dense_ids). floor(monotone/positive) is
-            # monotone, so buckets are order-aligned even at double
-            # precision. Bucket COUNT is pinned high (65536) rather than
-            # a small multiple of the partition count: with clustered key
-            # spaces (the scaled testdata shifts each replica's keys by
-            # 10M, leaving ~100k-wide islands) a bucket width near the
-            # island size leaves only ~#islands occupied buckets and the
-            # hash placement skews 3-8x (measured at sf10); width well
-            # below the island size keeps occupied buckets >> partitions
-            # (guide §2.5: many more distinct keys than partitions). The
-            # driver-side stats collect in _bucket_dense_ids is bounded by
-            # the bucket count either way.
-            lo, hi = bounds
-            n_buckets = 65536
-            span = hi - lo + 1
-            df = df.withColumn(
-                BUCKET_COL,
-                F.floor(
-                    (F.col(LINE_COL) - F.lit(lo)) * F.lit(n_buckets) / F.lit(span)
-                ).cast("long"),
-            )
-            df = df.repartition(nparts, BUCKET_COL)
-            bucketed = True
-        else:
-            df = df.repartition(nparts)
+        df = df.repartition(self.spark.sparkContext.defaultParallelism)
         if table == "orders":
             df = df.withColumn("o_orderdate_day", F.date_format("o_orderdate", "yyyy-MM-dd"))
-        passthrough = {LINE_COL, BUCKET_COL} if bucketed else {LINE_COL}
         return df.select(
-            *[F.col(c).cast("string").alias(c) for c in df.columns if c not in passthrough],
-            *sorted(passthrough),
+            *[F.col(c).cast("string").alias(c) for c in df.columns if c != LINE_COL],
+            LINE_COL,
         )
 
 
@@ -207,9 +128,7 @@ def _invalidate_if_cache_cleared(spark: SparkSession, sf_dir: str) -> None:
 
     Executing the stale plans as-is would be silently pathological, not
     cold: plan nodes still MARKED persisted but holding no data recompute
-    their full lineage at every consumer, and repartitionByRange's sampling
-    pass re-executes the now-uncached expensive child ~3x (measured
-    10s -> 44s on the sf1 observation stream). Originally this dropped
+    their full lineage at every consumer. Originally this dropped
     every memo (full py4j plan re-construction, ~0.6-0.7 s per query per
     bench rep); now it RE-REGISTERS the persists instead — pm and every
     frame the planner recorded in _persisted get .persist() again, so the

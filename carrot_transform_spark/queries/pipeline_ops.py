@@ -627,7 +627,7 @@ def txt_vocab_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     from carrot_transform_spark.queries import _QUERY_CACHES
 
     d = load(spark, sf_dir, "documents")
-    # with_dense_ids may leave its sizing cache persisted; route it into the
+    # with_dense_ids leaves its input cache persisted; route it into the
     # registry's release list so repeated suite runs don't accumulate caches
     vocab = build_vocab(d, "text", min_freq=_VOCAB_MIN_FREQ, persist_registry=_QUERY_CACHES)
     return (

@@ -89,6 +89,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # the console progress bar's "\r[Stage ..." prefixes garble stderr
+        # lines; it is read at context start, so it cannot be set later
+        .config("spark.ui.showConsoleProgress", "false")
         # per-DataFrame-API-call stack inspection + a JVM round trip, only
         # used to enrich error messages with user call sites; measured ~45%
         # of driver-side plan-construction time on expression-heavy plans

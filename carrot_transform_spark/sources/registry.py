@@ -7,8 +7,9 @@ Mirrors the reference's SourceObject dispatch (sources.py:57-69):
 
 Every reader returns all-string columns plus a ``__ct_line`` ordering
 column (monotonically increasing in file order) used for order-dependent
-id assignment; blank-named columns (the Excel trailing-comma artifact,
-reference sources.py:160-177) are dropped.
+id assignment, which also buckets rows by ``__ct_line >> 16``
+(operators/ids.py); blank-named columns (the Excel trailing-comma
+artifact, reference sources.py:160-177) are dropped.
 """
 
 from __future__ import annotations
@@ -20,15 +21,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 LINE_COL = "__ct_line"
-
-# Optional deterministic range-bucket of LINE_COL (an integer column added
-# by sources that can compute the line-key bounds cheaply, e.g. from
-# parquet footer statistics). Monotone non-decreasing in LINE_COL by
-# construction, so every bucket owns a disjoint line range — the dense-id
-# operator can then assign ids with zero extra shuffles and no range
-# sampling (operators/ids._bucket_dense_ids). Sources that add it also
-# hash-repartition their output on it, making it the spread exchange key.
-BUCKET_COL = "__ct_bucket"
 
 
 def _max_partition_bytes(spark: SparkSession) -> int:
@@ -57,25 +49,11 @@ class Source:
     def read(self, table: str) -> DataFrame:  # pragma: no cover - interface
         raise NotImplementedError
 
-    def size_hint(self, table: str) -> int | None:
-        """Cheap upper bound on read(table)'s row count (e.g. parquet footer
-        metadata), or None when unknowable without a scan. Lets dense-id
-        assignment skip its sizing pass for known-small inputs."""
-        return None
-
     def scan_splits(self, table: str) -> int | None:
         """Estimated number of partitions the scan of `table` produces, or
         None when unknowable cheaply. Lets the planner decide whether to
         spread a narrow scan without the ~1s driver-side plan-to-RDD
         conversion of df.rdd.getNumPartitions()."""
-        return None
-
-    def line_bounds(self, table: str) -> tuple[int, int] | None:
-        """(min, max) of read(table)'s LINE_COL values when knowable
-        without a scan (e.g. parquet footer statistics of the natural-key
-        column), else None. Lets dense-id assignment derive deterministic
-        range buckets of the line key (ids._bucket_dense_ids) instead of
-        a sampling range exchange."""
         return None
 
     def _finalize(self, df: DataFrame) -> DataFrame:

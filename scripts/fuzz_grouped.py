@@ -33,9 +33,6 @@ class _MemSource(Source):
         self._tables = tables
         self._dfs = {}
 
-    def size_hint(self, table):
-        return len(self._tables[table][1])
-
     def read(self, table):
         if table not in self._dfs:
             cols, rows = self._tables[table]

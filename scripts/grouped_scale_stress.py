@@ -7,9 +7,9 @@ group_same_shape on and off.
 
 What it reports per mode: build wall = target_candidates(), which at
 this volume INCLUDES the dense-id materialization jobs (with_dense_ids
-persists the candidates frame and counts it — the full record-template
-execution happens here, so this is the number where executor-side
-template cost shows up); agg wall = the checksum aggregation over the
+persists the candidates frame and collects its per-bucket counts — the
+full record-template execution happens here, so this is the number where
+executor-side template cost shows up); agg wall = the checksum aggregation over the
 then-cached frame; metrics-flush wall (grouped = ONE groupBy(fileidx)
 job, per-block = one combined job per file); and a row-count + column
 checksum so the two executions are provably the same records.
@@ -53,9 +53,6 @@ class _GenSource(Source):
     def __init__(self, spark, n_rows: int):
         self.spark = spark
         self.n_rows = n_rows
-
-    def size_hint(self, table: str) -> int:
-        return self.n_rows
 
     def read(self, table: str):
         b = int(table.split("_")[1].split(".")[0])

@@ -28,9 +28,6 @@ class _MemSource(Source):
         self.spark = spark
         self._dfs: dict[str, object] = {}
 
-    def size_hint(self, table: str) -> int:
-        return 40
-
     def read(self, table: str):
         if table not in self._dfs:
             rows = []
@@ -219,9 +216,6 @@ class _MemSourceV1(Source):
     def __init__(self, spark):
         self.spark = spark
         self._dfs: dict[str, object] = {}
-
-    def size_hint(self, table: str) -> int:
-        return 30
 
     def read(self, table: str):
         if table not in self._dfs:

@@ -63,3 +63,25 @@ def test_maybe_broadcast_respects_stats_end_to_end(spark):
         assert "ResolvedHint" not in plan and "UnresolvedHint" not in plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_prefer_shuffle_hash_size_probe(spark):
+    """prefer_shuffle_hash's size probe, called directly: a Spark upgrade
+    that moves it fails here instead of the caller's fallback silently
+    keeping the planner's join. A negative broadcast threshold means
+    "never broadcast", so the hint is always wanted."""
+    from carrot_transform_spark.operators.dedup import plan_size_bytes, prefer_shuffle_hash
+
+    df = spark.range(1000).withColumn("pad", F.lit("x" * 32))
+    assert 0 < plan_size_bytes(df) < 1 << 40
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1b")
+        assert prefer_shuffle_hash(df)
+        spark.conf.set(key, str(1 << 40))
+        assert not prefer_shuffle_hash(df)
+        spark.conf.set(key, "-1")
+        assert prefer_shuffle_hash(df)
+    finally:
+        spark.conf.set(key, old)

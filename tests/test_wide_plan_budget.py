@@ -30,11 +30,6 @@ class _MemSource(Source):
         self.spark = spark
         self._df = None
 
-    def size_hint(self, table: str) -> int:
-        # like the file sources: a driver-side row bound, so the dense-id
-        # stage plans its small path without an extra sizing pass
-        return N_ROWS
-
     def read(self, table: str):
         if self._df is None:
             fields = ", ".join(f"f{j} string" for j in range(N_FIELDS))
